@@ -408,6 +408,14 @@ def _gif_subblocks(payload: bytes, pos: int) -> tuple[bytes, int]:
         pos += n
 
 
+# The header's two u16 fields alone can ask for a 65535 x 65535 x 3
+# (12.9 GB) canvas; larger screens are refused before allocating it.
+# The ceiling is Pillow's (DecompressionBombError at 2 x
+# Image.MAX_IMAGE_PIXELS), so both GIF decode paths refuse the same
+# screens.
+_GIF_MAX_SCREEN_PIXELS = 2 * 89_478_485
+
+
 def _gif_iter_frames(payload: bytes):
     """Walk a GIF87a/89a image, yielding ``(canvas, delay_cs)`` per
     animation frame — ``canvas`` is the COMPOSED logical screen
@@ -430,6 +438,9 @@ def _gif_iter_frames(payload: bytes):
     w, h = u16(6), u16(8)
     if w == 0 or h == 0 or len(payload) < 13:
         raise ValueError("GIF: empty logical screen")
+    if w * h > _GIF_MAX_SCREEN_PIXELS:
+        raise ValueError(f"GIF: {w}x{h} logical screen exceeds "
+                         f"{_GIF_MAX_SCREEN_PIXELS} pixels")
     packed, bg = payload[10], payload[11]
     pos, gct = 13, None
     if packed & 0x80:
@@ -441,7 +452,8 @@ def _gif_iter_frames(payload: bytes):
         pos += 3 * n
     bg_rgb = (gct[bg] if gct is not None and bg < len(gct)
               else np.zeros(3, dtype=np.uint8))
-    canvas = np.broadcast_to(bg_rgb, (h, w, 3)).astype(np.uint8).copy()
+    canvas = np.empty((h, w, 3), dtype=np.uint8)
+    canvas[...] = bg_rgb
     transparent = None
     disposal = 0
     delay_cs = 0

@@ -4,12 +4,12 @@ Re-expresses the reference's second EMR job (detect_scenes.py) Spark-first:
 
 - The reference leaves Catalyst for per-row Python three times
   (``df.rdd.map`` at detect_scenes.py:115-117 and 185-190, a scalar UDF at
-  192-193). Here every step is a Catalyst expression: the geometric
-  object-in-lane test is nested higher-order array functions
-  (``transform``/``filter``/``aggregate``), people counting is
-  ``size(filter(...))``, and the state machine is ``when/otherwise`` +
-  window lag/lead — so the whole job stays inside whole-stage codegen and
-  survives a 100 TB scan without a Python worker round trip.
+  192-193). Here no step runs Python: the geometric object-in-lane test
+  is a relational plan (:func:`objects_in_lane_by_key`: explode → join →
+  aggregate, every heavy operator in whole-stage codegen), people
+  counting is ``size(filter(...))``, and the state machine is
+  ``when/otherwise`` + window lag/lead — so the whole job survives a
+  100 TB scan without a Python worker round trip.
 
 - Inputs are *typed* columns (``array<struct<...>>``), not the reference's
   double-nested JSON strings (detect_scenes.py:96). ``from_json`` adapters
@@ -61,102 +61,34 @@ LANES_SCHEMA = T.ArrayType(T.StructType([
 MAX_NEAREST_DIST = 1000.0
 
 
-def _nearest_xs(lanes: Column, cx: Column, cy: Column) -> Column:
-    """x of the nearest image point per lane (null when the lane has no
-    point within MAX_NEAREST_DIST) — detect_scenes.py:19-44 as one
-    ``transform`` + running-argmin ``aggregate``."""
-    init = F.lit(None).cast("struct<d:double,px:double>")
-
-    def per_lane(lane):
-        def step(acc, p):
-            d = F.sqrt((p["x"] - cx) * (p["x"] - cx) + (p["y"] - cy) * (p["y"] - cy))
-            better = d < F.coalesce(acc["d"], F.lit(MAX_NEAREST_DIST))
-            return F.when(better, F.struct(d.alias("d"), p["x"].alias("px"))).otherwise(acc)
-
-        return F.aggregate(lane["image_points"], init, step)["px"]
-
-    return F.transform(lanes, per_lane)
-
-
-def _corner_label(nearest: Column, cx: Column) -> Column:
-    """First adjacent-lane pair whose nearest-point xs bracket ``cx``;
-    null when none — detect_scenes.py:47-64."""
-    n = F.size(nearest)
-    idx = F.sequence(F.lit(0), n - 2)
-
-    def brackets(i):
-        a = F.element_at(nearest, (i + 1).cast("int"))
-        b = F.element_at(nearest, (i + 2).cast("int"))
-        return (a.isNotNull() & b.isNotNull()
-                & (((cx >= a) & (cx <= b)) | ((cx <= a) & (cx >= b))))
-
-    hits = F.filter(idx, brackets)
-    first = F.element_at(hits, 1)
-    return F.when(
-        (n >= 2) & (F.size(hits) > 0),
-        F.concat(F.lit("between_"), first.cast("string"),
-                 F.lit("_and_"), (first + 1).cast("string")))
-
-
-def objects_in_lane(detections: Column | str, lanes: Column | str) -> Column:
-    """``array<struct<x,y,width,height,Class,corners_in_lane,lanes>>`` of
-    the detections with ≥1 bbox corner inside a lane — the reference's
-    ``obj_in_lane_detection`` (detect_scenes.py:93-112) without leaving
-    Catalyst. Null if either input is null."""
-    dets = F.col(detections) if isinstance(detections, str) else detections
-    lns = F.col(lanes) if isinstance(lanes, str) else lanes
-
-    def per_object(o):
-        x_min, x_max = o["x"] - o["width"] / 2, o["x"] + o["width"] / 2
-        y_min, y_max = o["y"] - o["height"] / 2, o["y"] + o["height"] / 2
-        corner_labels = F.array(*[
-            _corner_label(_nearest_xs(lns, cx, cy), cx)
-            for cx, cy in ((x_min, y_min), (x_max, y_min),
-                           (x_min, y_max), (x_max, y_max))
-        ])
-        in_lane = F.filter(corner_labels, lambda v: v.isNotNull())
-        return F.struct(
-            o["x"].alias("x"), o["y"].alias("y"),
-            o["width"].alias("width"), o["height"].alias("height"),
-            o["Class"].alias("Class"),
-            F.size(in_lane).alias("corners_in_lane"),
-            F.array_distinct(in_lane).alias("lanes"),
-        )
-
-    enriched = F.transform(dets, per_object)
-    kept = F.filter(enriched, lambda s: s["corners_in_lane"] > 0)
-    return F.when(dets.isNotNull() & lns.isNotNull(), kept)
-
-
 def objects_in_lane_by_key(df: DataFrame, detections_col: str,
                            lanes_col: str, keys: list[str],
                            out_col: str = "objects_in_lane") -> DataFrame:
-    """:func:`objects_in_lane` as a relational plan (explode → join →
-    aggregate) instead of nested array expressions.
+    """Append ``out_col``: ``array<struct<x,y,width,height,Class,
+    corners_in_lane,lanes>>`` of the detections with ≥1 bbox corner
+    inside a lane — the reference's ``obj_in_lane_detection``
+    (detect_scenes.py:93-112) as a relational plan (explode → join →
+    aggregate). Not nested higher-order array functions: those are
+    CodegenFallback in Spark, interpreted row-at-a-time, and the
+    argmin-per-lane-per-corner tree cost ~3.6 ms/row in that form.
 
-    Same semantics, different physical strategy: higher-order array
-    functions are CodegenFallback in Spark — evaluated row-at-a-time by
-    the interpreter — and the nested argmin-per-lane-per-corner tree
-    costs ~3.6 ms/row, which cannot survive a 100 TB scan. This
-    formulation joins lane points to exploded *detections* (not corners:
-    all four corner↔point distances are evaluated in one whole-stage-
-    codegen projection per joined row, 4× fewer join rows than a corner
-    explode), takes the per-(detection, lane) argmin for each corner as
-    four ``min(struct(d, pi, px))`` hash aggregates, finds the first
-    adjacent-lane pair bracketing each corner with a window ``lead``
-    over the lane index (replacing a lanes×lanes self-join), and
-    rebuilds the per-row array with ``collect_list`` + position sort.
-    Every heavy operator is codegen'd; the only higher-order calls left
-    run on ≤4-element arrays.
+    Lane points are joined to exploded *detections* (not corners: all
+    four corner↔point distances are evaluated in one whole-stage-codegen
+    projection per joined row, 4× fewer join rows than a corner
+    explode). The per-(detection, lane) argmin for each corner is four
+    ``min(struct(d, pi, px))`` hash aggregates; the first adjacent-lane
+    pair bracketing each corner comes from a window ``lead`` over the
+    lane index (not a lanes×lanes self-join); ``collect_list`` +
+    position sort rebuilds the per-row array. Every heavy operator is
+    codegen'd; the only higher-order calls run on ≤4-element arrays.
 
     All shuffles share the ``keys`` prefix (join on keys → aggregate on
     (keys, det, lane) → window + aggregate on (keys, det) → aggregate on
     keys), so AQE coalesces them into co-partitioned exchanges; the
     dets × lane-points row multiplication is the inherent work of the
-    geometry, spread across the cluster instead of nested inside one
-    interpreted expression. Detection attributes ride through the
-    aggregates as ``first()``s, so nothing joins back to the exploded
-    detections.
+    geometry, spread across the cluster. Detection attributes ride
+    through the aggregates as ``first()``s, so nothing joins back to the
+    exploded detections.
 
     ``keys`` must uniquely identify rows of ``df`` (the reference keys
     scenes by bag + timestamp: detect_scenes.py:197-201); otherwise
@@ -164,8 +96,9 @@ def objects_in_lane_by_key(df: DataFrame, detections_col: str,
 
     Returns ``df``'s columns plus ``out_col``; row order is not
     preserved (it is never meaningful to the downstream window, which
-    re-sorts by time). Null detections/lanes → null, exactly like
-    :func:`objects_in_lane` (detect_scenes.py:93-112).
+    re-sorts by time). A row whose detections or lanes are null gets a
+    null ``out_col`` (detect_scenes.py:93-112); a valid row with no
+    detection in lane gets an empty array.
     """
     dets = F.col(detections_col)
     lns = F.col(lanes_col)
@@ -273,16 +206,6 @@ def objects_in_lane_by_key(df: DataFrame, detections_col: str,
             .select(*df.columns,
                     F.when(F.col("_valid"),
                            F.coalesce(F.col("_oil"), empty)).alias(out_col)))
-
-
-def detect_scenes(df: DataFrame, detections_col: str, lanes_col: str,
-                  keep_cols: list[str] | None = None) -> DataFrame:
-    """Scene-detection projection (detect_scenes.py:115-117 ``detect_scenes``):
-    input wide synchronized frame → (keep_cols…, objects_in_lane)."""
-    keep = keep_cols or [c for c in df.columns
-                         if c not in (detections_col, lanes_col)]
-    return df.select(
-        *keep, objects_in_lane(detections_col, lanes_col).alias("objects_in_lane"))
 
 
 def people_in_scene(objects_col: Column | str = "objects_in_lane",

@@ -7,37 +7,24 @@ single lazy Catalyst plan:
 |---|---|
 | per-file loop + union (44-75) | one multi-path read / ``union_by_name`` |
 | ``to_json(struct)`` payload (93-98) | optional — typed values by default |
-| driver ``collect()`` + per-bag ``spark.range`` grid (111-157) | ``groupBy().agg(min,max)`` + ``sequence``/``explode`` (pure plan) |
-| pivot without values (173-178) | pivot with explicit topic list (no distinct scan) |
+| driver ``collect()`` + per-bag ``spark.range`` grid (111-157) | ``operators.timeseries.resample_asof``'s spine: ``groupBy().agg(min,max)`` + ``sequence``/``explode`` (pure plan) |
+| pivot without values (173-178) | none — each topic already owns its column; the narrow per-topic frames are unioned by name |
 | global ``orderBy(Time)`` (184) | dropped — the window sort suffices |
-| per-topic window fill loop (189-191) | one Window operator (shared spec) |
+| per-topic window fill loop (189-191) | ``resample_asof``'s one Window operator (shared spec) |
 
-Scale: two shuffles on the bag keys (bounds agg, window) + the pivot
-agg; no driver round trip, no Python. Works unchanged for millions of
-bags at 100 TB because the spine is generated executor-side.
+Scale: two shuffles on the bag keys (spine bounds agg, window); no
+driver round trip, no Python. Works unchanged for millions of bags at
+100 TB because the spine is generated executor-side.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.timeseries import time_spine
-
-
-def pack_payload(df: DataFrame, keys: list[str], time_col: str,
-                 as_json: bool = False) -> DataFrame:
-    """Collapse all non-key columns into one ``payload`` column — the
-    reference's ``create_json_payload`` (synchronize_topics.py:93-98).
-    ``as_json=True`` reproduces the reference's JSON-string payload;
-    default keeps a typed struct so Catalyst can still prune/push."""
-    data_cols = [c for c in df.columns if c not in set(keys) | {time_col}]
-    payload = F.struct(*data_cols)
-    if as_json:
-        payload = F.to_json(payload)
-    return df.select(*keys, time_col, payload.alias("payload"))
+from ..operators.timeseries import resample_asof
 
 
 def synchronize_topics(topic_dfs: dict[str, DataFrame], keys: list[str],
@@ -47,37 +34,28 @@ def synchronize_topics(topic_dfs: dict[str, DataFrame], keys: list[str],
     group, forward-filling each topic's latest payload — the whole sync
     job (synchronize_topics.py:200-223) as one composable transform.
 
-    Output: ``keys + [time_col] + [<topic> ...]`` with one payload column
-    per topic (struct, or JSON string with ``as_json`` for reference
-    parity), one row per (keys, tick)."""
+    Each topic's non-key columns become one payload column named after
+    the topic: ``struct(<data cols>)``, or its ``to_json`` string with
+    ``as_json`` (the reference's ``create_json_payload``,
+    synchronize_topics.py:93-98). The narrow per-topic frames are
+    unioned by name — a topic's column is null on other topics' rows —
+    and handed to :func:`resample_asof`, so each output column carries
+    exactly its own topic's type.
+
+    Output: ``keys + [time_col] + sorted(topics)``, one row per
+    (keys, tick).
+
+    Ties: a sample exactly on a tick is visible at that tick. When one
+    topic has two samples at the same instant, one of them is kept
+    arbitrarily — the reference's post-shuffle ``first()``
+    (synchronize_topics.py:177) is equally unordered."""
     topics = sorted(topic_dfs)
-    long = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [pack_payload(df, keys, time_col, as_json=as_json)
-         .withColumn("topic", F.lit(t))
-         for t, df in topic_dfs.items()])
 
-    # wide signal rows: one column per topic at observed times.
-    # first() matches the reference's dedup policy for multiple samples in
-    # one tick instant (synchronize_topics.py:177); values=topics skips
-    # the pivot's distinct scan.
-    wide = (long.groupBy(*keys, time_col)
-            .pivot("topic", topics)
-            .agg(F.first("payload")))
+    def payload(t: str) -> DataFrame:
+        df = topic_dfs[t]
+        p = F.struct(*[c for c in df.columns if c not in set(keys) | {time_col}])
+        return df.select(*keys, time_col, (F.to_json(p) if as_json else p).alias(t))
 
-    spine = (time_spine(long, keys, time_col, step)
-             .withColumn("_is_spine", F.lit(1)))
-    unioned = wide.withColumn("_is_spine", F.lit(0)).unionByName(
-        spine, allowMissingColumns=True)
-
-    # one Window spec → Catalyst evaluates all topic fills in a single
-    # physical Window operator. Signal rows at exactly a tick time sort
-    # before the spine row (_is_spine asc) so their value lands on it.
-    w = (Window.partitionBy(*keys)
-         .orderBy(F.col(time_col).asc(), F.col("_is_spine").asc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    filled = unioned.select(
-        *keys, time_col, "_is_spine",
-        *[F.last(t, ignorenulls=True).over(w).alias(t) for t in topics])
-
-    return (filled.where(F.col("_is_spine") == 1).drop("_is_spine"))
+    signals = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                     [payload(t) for t in topics])
+    return resample_asof(signals, keys, time_col, step, topics)

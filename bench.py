@@ -108,8 +108,13 @@ def _one_session(sf_dir: str, sf: float) -> dict:
             # an errored run may have left cache behind (the dedup pair
             # operators persist() their signature relation; the CALLER
             # owns the lifetime, dedup.py:24-29) — don't let it skew the
-            # next query's measurement
-            spark.catalog.clearCache()
+            # next query's measurement. The failure may have killed the
+            # session; the remaining queries still get their turn.
+            try:
+                spark.catalog.clearCache()
+            except Exception as ce:
+                print(f"bench: clearCache after {name} failed: "
+                      f"{type(ce).__name__}: {ce}", file=sys.stderr)
 
     # per-variant attribution for folded (tagged-union) entries
     # (r14 — VERDICT r13 item 6): one filtered steady-state run per

@@ -3,8 +3,11 @@ r12 item 6): a synthetic slowdown beyond the measured spread envelope
 is flagged; a noise swing inside the envelope is not."""
 
 import json
+import sys
+import types
+from unittest import mock
 
-from bench import _detect_regressions
+from bench import _detect_regressions, _one_session
 
 
 def _write_baseline(tmp_path, queries, spread=None, sf=0.1):
@@ -70,3 +73,29 @@ def test_driver_round_fallback(tmp_path):
     # new queries with no baseline entry never flag
     got2 = _detect_regressions(_doc({"q_new": 9.0}), str(tmp_path))
     assert got2["regressions"] == []
+
+
+def test_failed_recovery_clear_cache_does_not_abort_the_loop(spark, monkeypatch):
+    """A query failure that also breaks the session's clearCache() still
+    lets every later query be measured. (``spark`` is requested because
+    the session warm-up builds a Column, which needs a live context.)"""
+    from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark import session
+
+    def q_bad(spark, sf_dir):
+        raise RuntimeError("query died")
+
+    calls = []
+
+    def clear_cache():  # the first call is q_bad's recovery
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("session died")
+
+    fake = mock.MagicMock()
+    fake.catalog.clearCache.side_effect = clear_cache
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: fake)
+    monkeypatch.setitem(sys.modules, "__spark_entry__", types.SimpleNamespace(
+        queries=lambda: {"q_bad": q_bad, "q_good": lambda spark, sf: mock.MagicMock()}))
+    got = _one_session("unused", 0.1)
+    assert got["queries"]["q_bad"] == -1.0
+    assert got["queries"]["q_good"] >= 0.0

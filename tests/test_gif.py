@@ -213,6 +213,10 @@ def test_guards_loud():
     # frame exceeding the logical screen
     with pytest.raises(ValueError, match="exceeds"):
         _decode_gif(_gif_file(2, 2, [(1, 0, idx, None, False)], pal))
+    # a screen too large to allocate (65535 x 65535 x 3 = 12.9 GB) is
+    # refused before its canvas exists
+    with pytest.raises(ValueError, match="logical screen exceeds"):
+        _decode_gif(_gif_file(65535, 65535, [(0, 0, idx, None, False)], pal))
     # no color table anywhere
     with pytest.raises(ValueError, match="neither"):
         _decode_gif(_gif_file(2, 2, [(0, 0, idx, None, False)], None))

@@ -346,7 +346,7 @@ def test_mcap_to_scene_detection_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline.scenes import (
-        detect_scenes, summarize_person_scenes,
+        objects_in_lane_by_key, summarize_person_scenes,
     )
     two_lanes = [[(0.0, 0.0), (0.0, 50.0)],
                  [(10.0, 0.0), (10.0, 50.0)]]
@@ -378,7 +378,8 @@ def test_mcap_to_scene_detection_end_to_end(spark, tmp_path):
                          F.col("log_time_ns").alias("time_ns"),
                          "lanes")
     joined = dets.join(lanes, ["mcap_file", "time_ns"])
-    scored = detect_scenes(joined, "detections", "lanes")
+    scored = objects_in_lane_by_key(joined, "detections", "lanes",
+                                    ["mcap_file", "time_ns"])
     intervals = summarize_person_scenes(scored, ["mcap_file"],
                                         time_col="time_ns").collect()
     assert len(intervals) == 1

@@ -3,8 +3,8 @@
 The geometry test uses an independent pure-Python oracle implementing the
 documented reference semantics (detect_scenes.py:13-112 — nearest lane
 point with strict 1000 cutoff, x-only between-ness over adjacent lane
-pairs, 4 bbox corners, first pair wins) and checks the Catalyst
-expression version against it on seeded random scenes.
+pairs, 4 bbox corners, first pair wins) and checks the relational
+``objects_in_lane_by_key`` plan against it on seeded random scenes.
 """
 
 import math
@@ -12,10 +12,10 @@ import random
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline import (
-    detect_scenes, objects_in_lane, objects_in_lane_by_key,
-    parse_reference_json, people_in_scene,
+    objects_in_lane_by_key, parse_reference_json, people_in_scene,
     summarize_person_scenes,
     synchronize_topics,
 )
@@ -69,47 +69,14 @@ def _random_scene(rng):
     return objects, lanes
 
 
-def test_objects_in_lane_matches_python_oracle(spark):
-    rng = random.Random(7)
-    scenes = [_random_scene(rng) for _ in range(60)]
-    rows = [
-        (i,
-         [{"x": x, "y": y, "width": w, "height": h, "Class": c}
-          for x, y, w, h, c in objs],
-         [{"image_points": [{"x": px, "y": py} for px, py in lane]}
-          for lane in lanes])
-        for i, (objs, lanes) in enumerate(scenes)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "id long, dets array<struct<x:double,y:double,width:double,"
-        "height:double,Class:string>>, "
-        "lanes array<struct<image_points:array<struct<x:double,y:double>>>>")
-    got = {r.id: r.oil for r in
-           df.select("id", objects_in_lane("dets", "lanes").alias("oil")).collect()}
-    for i, (objs, lanes) in enumerate(scenes):
-        expect = _oracle_objects_in_lane(objs, lanes)
-        mine = [(o.x, o.y, o.width, o.height, o.Class,
-                 o.corners_in_lane, list(o.lanes)) for o in got[i]]
-        assert mine == expect, f"scene {i}"
-
-
-def test_objects_in_lane_null_inputs(spark):
-    df = spark.createDataFrame(
-        [(1, None, None)],
-        "id long, dets array<struct<x:double,y:double,width:double,"
-        "height:double,Class:string>>, "
-        "lanes array<struct<image_points:array<struct<x:double,y:double>>>>")
-    got = df.select(objects_in_lane("dets", "lanes").alias("o")).collect()
-    assert got[0].o is None
-
-
-def test_objects_in_lane_by_key_matches_oracle_and_expression(spark):
-    """The relational (explode→join→agg) plan must agree with both the
-    Python oracle and the expression formulation on random scenes,
-    including empty/point-free lanes, empty detections, and null rows."""
-    rng = random.Random(13)
-    scenes = [_random_scene(rng) for _ in range(60)]
+def test_objects_in_lane_by_key_matches_oracle(spark):
+    """The relational (explode→join→agg) plan must agree with the Python
+    oracle on two seeded sets of random scenes, including empty/point-free
+    lanes, empty detections, and a null row."""
+    scenes = []
+    for seed in (7, 13):
+        rng = random.Random(seed)
+        scenes += [_random_scene(rng) for _ in range(60)]
     rows = [
         (i,
          [{"x": x, "y": y, "width": w, "height": h, "Class": c}
@@ -150,6 +117,10 @@ def topic_dfs(spark):
 
 def test_synchronize_topics_grid_and_locf(topic_dfs):
     out = synchronize_topics(topic_dfs, KEYS, step=0.1)
+    # each topic column carries exactly its own topic's fields
+    types = dict(out.dtypes)
+    assert types["steering"] == "struct<angle:double>"
+    assert types["gps"] == "struct<x:double>"
     rows = {(r.bag_file, round(r.Time, 1)): r for r in out.collect()}
     # b1 spans ticks 0.0..0.3, b2 5.0..5.2
     assert {k for k in rows} == {("b1", 0.0), ("b1", 0.1), ("b1", 0.2),
@@ -163,6 +134,29 @@ def test_synchronize_topics_grid_and_locf(topic_dfs):
     assert rows[("b1", 0.3)].gps.x == 10.0          # 0.31 lands after tick
     assert rows[("b2", 5.2)].steering.angle == 9.0  # 5.25 lands after tick
     assert rows[("b2", 5.0)].gps is None          # never observed in b2
+
+
+def test_synchronize_topics_many_typed_topics(spark):
+    """Eight topics with distinct field names: every output column's
+    struct is exactly its topic's data columns (no other topic's fields
+    merged in), and LOCF holds per topic."""
+    n = 8
+    topic_dfs = {
+        f"t{i}": spark.createDataFrame(
+            [("b1", 0.01 * i, float(i), i), ("b1", 0.5 + 0.01 * i, 10.0 + i, 10 + i)],
+            f"bag_file string, Time double, a{i} double, n{i} long")
+        for i in range(n)}
+    out = synchronize_topics(topic_dfs, KEYS, step=0.1)
+    assert out.columns == ["bag_file", "Time"] + sorted(topic_dfs)
+    for t, df in topic_dfs.items():
+        assert out.schema[t].dataType == T.StructType(df.schema.fields[2:]), t
+    rows = {round(r.Time, 1): r for r in out.collect()}
+    assert sorted(rows) == [0.0, 0.1, 0.2, 0.3, 0.4, 0.5]
+    assert rows[0.0].t0.a0 == 0.0 and rows[0.0].t3 is None  # t3 starts at 0.03
+    assert rows[0.1].t7.n7 == 7                 # carried from 0.07
+    assert rows[0.4].t5.a5 == 5.0               # carried through the gap
+    assert rows[0.5].t0.a0 == 10.0              # 0.50 lands on the tick
+    assert rows[0.5].t4.n4 == 4                 # 0.54 lands after the tick
 
 
 def test_synchronize_topics_json_mode(topic_dfs):
@@ -197,7 +191,7 @@ def test_summarize_person_scenes(spark):
 
 
 def test_reference_pseudo_json_end_to_end(spark):
-    """Reference-shaped payloads all the way through detect_scenes →
+    """Reference-shaped payloads all the way through object-in-lane →
     summarize_person_scenes: the *_clean cells are single-quoted Python
     reprs with None literals (the actual on-disk shape produced by
     main.py:51-58,110-113), wrapped once more in the to_json payload of
@@ -230,8 +224,8 @@ def test_reference_pseudo_json_end_to_end(spark):
     df = spark.createDataFrame(
         rows, "bag_file string, Time double, det string, lane string")
     parsed = parse_reference_json(df, "det", "lane")
-    detected = detect_scenes(parsed, "_detections", "_lanes",
-                             keep_cols=["bag_file", "Time"])
+    detected = objects_in_lane_by_key(parsed, "_detections", "_lanes",
+                                      ["bag_file", "Time"])
     got = {r.Time: r.objects_in_lane for r in detected.collect()}
     assert [o.Class for o in got[0.0]] == []          # x=500 outside lanes
     assert [o.Class for o in got[0.1]] == ["person"]  # x=100 between 60,140

@@ -382,7 +382,7 @@ def test_bag_to_scene_detection_end_to_end(spark, tmp_path):
     scene intervals: the reference's whole pipeline (entry points A+B+C)
     on bag-derived columns, no JSON round trip."""
     from aws_autonomous_driving_data_lake_ros_bag_scene_detection_pipeline_spark.pipeline.scenes import (
-        detect_scenes, summarize_person_scenes,
+        objects_in_lane_by_key, summarize_person_scenes,
     )
     (tmp_path / "scene.bag").write_bytes(make_scene_bag())
     msgs = read_bag_messages(spark, str(tmp_path))
@@ -394,7 +394,8 @@ def test_bag_to_scene_detection_end_to_end(spark, tmp_path):
         LANES_DEF).select("bag_file", "time_ns", "lanes")
     joined = dets.join(lanes, ["bag_file", "time_ns"])
 
-    scored = detect_scenes(joined, "detections", "lanes")
+    scored = objects_in_lane_by_key(joined, "detections", "lanes",
+                                    ["bag_file", "time_ns"])
     intervals = summarize_person_scenes(scored, ["bag_file"],
                                         time_col="time_ns").collect()
     assert len(intervals) == 1
